@@ -188,6 +188,9 @@ def test_local_rows_df_slices_by_size(spark):
     tiny = pt.local_rows_df(spark, [(1, 2), (3, 4)], "a long, b long")
     assert tiny.rdd.getNumPartitions() == 1
     assert sorted(tuple(r) for r in tiny.collect()) == [(1, 2), (3, 4)]
+    # an exact multiple of rows_per_slice needs no extra slice
+    exact = pt.local_rows_df(spark, [(i,) for i in range(4)], "a long", rows_per_slice=4)
+    assert exact.rdd.getNumPartitions() == 1
     big = pt.local_rows_df(
         spark, [(i,) for i in range(120_000)], "a long", rows_per_slice=50_000
     )

@@ -168,7 +168,10 @@ def test_cli_etl_pheno_end_to_end(spark, tmp_path):
     assert rows["s2"]["sample_type"] == "Solid Tissue Normal"
     # list-valued clinical leaf never reaches the matrix
     assert "icd_10_codes" not in rows["s1"]
-    assert os.path.exists(out_dir + ".json")
+    with open(out_dir + ".json") as f:
+        meta = json.load(f)
+    assert meta["type"] == "clinicalMatrix"
+    assert meta["xena_dtype"] == "clinical"
 
 
 def test_hits_to_df_and_samples_clinical_offline(spark):

@@ -83,6 +83,8 @@ def test_rebalance_groups_uniform_and_target(spark):
     c2 = {r.g: r.n for r in out2.groupBy("g").agg(F.count("*").alias("n")).collect()}
     assert c2["big"] == 3000  # target share above natural share -> keep all
     assert c2["mid"] < 400 and c2["small"] == 100
+    # an empty target lists no group, and an unlisted group is dropped
+    assert rebalance_groups(df, "g", "k", target={}).count() == 0
 
 
 def test_write_partitioned_layout_roundtrip(spark):

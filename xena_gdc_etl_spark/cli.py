@@ -17,6 +17,8 @@ import sys
 
 
 def create_parser() -> argparse.ArgumentParser:
+    from xena_gdc_etl_spark.gdc_pipelines import PHENO_DTYPES
+
     parser = argparse.ArgumentParser(
         prog="xge-spark", description="Spark-native Xena/GDC ETL engine"
     )
@@ -54,7 +56,7 @@ def create_parser() -> argparse.ArgumentParser:
     pheno.add_argument(
         "--dtype",
         default="GDC_phenotype",
-        choices=["clinical", "biospecimen", "raw_phenotype", "GDC_phenotype"],
+        choices=PHENO_DTYPES,
     )
     pheno.add_argument("--root-dir", default=".")
     pheno.add_argument("--release", default="")
@@ -415,7 +417,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if options.subcomm == "etl":
         from xena_gdc_etl_spark.gdc_pipelines import transform_matrix_dtype
-        from xena_gdc_etl_spark.sources.xena_tsv import write_xena_tsv
 
         if options.manifest:
             # reference main.py:19 etl → download THEN transform
@@ -465,22 +466,16 @@ def main(argv: list[str] | None = None) -> int:
             feature_col=options.feature_col,
             value_col=options.value_col,
         )
-        write_xena_tsv(matrix, options.out)
-        # metadata sidecar like every other landing path (the manifest
-        # route and gdc2xena both emit one; a Xena loader needs it)
-        from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
+        # the same landing step as the manifest route and gdc2xena: the
+        # matrix plus the metadata sidecar a Xena loader needs
+        from xena_gdc_etl_spark.pipeline import land_matrix
 
-        meta_path = write_metadata(
-            build_metadata(
-                options.project or "unknown",
-                options.dtype,
-                options.out,
-                options.release or "",
-            ),
-            options.out,
+        out = land_matrix(
+            matrix, options.out, options.project or "unknown", options.dtype,
+            options.release,
         )
-        print(f"Xena matrix is saved at {options.out}.")
-        print(f"Metadata JSON is saved at {meta_path}.")
+        print(f"Xena matrix is saved at {out}.")
+        print(f"Metadata JSON is saved at {out}.json.")
         return 0
 
     if options.subcomm == "gdc2xena":
@@ -554,13 +549,12 @@ def main(argv: list[str] | None = None) -> int:
         import os
 
         from pyspark.sql import functions as F
-        from pyspark.sql.functions import broadcast
 
         from xena_gdc_etl_spark.operators.mapping import (
             SAMPLE_COLUMN_DTYPES,
             SUFFIX_TRIM_PROJECTS,
             postprocess_rename_dedup,
-            trim_sample_suffix,
+            rename_by_mapping,
         )
         from xena_gdc_etl_spark.sources.xena_tsv import (
             read_xena_tsv,
@@ -680,23 +674,9 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 # wide-native reference twin: rename sample ids via the
                 # broadcast (sample, case) map, then full-row distinct
-                m = mapping.select(
-                    F.col("sample").alias("__from"),
-                    F.col("case").alias("__to"),
+                out_df = rename_by_mapping(
+                    wide, mapping, sample_first, "sample", "case"
                 ).distinct()
-                out_df = (
-                    wide.join(
-                        broadcast(m),
-                        on=wide[sample_first] == F.col("__from"),
-                        how="left",
-                    )
-                    .withColumn(
-                        sample_first,
-                        F.coalesce(F.col("__to"), F.col(sample_first)),
-                    )
-                    .drop("__from", "__to")
-                    .distinct()
-                )
 
         out = _postprocessed_out_path(options.file)
         if col_form:

@@ -29,8 +29,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# dtypes routed to each dataset kind (reference gdc2xena.py:86-92)
-PHENO_DTYPES = ("clinical", "biospecimen", "raw_phenotype", "GDC_phenotype")
+from xena_gdc_etl_spark.gdc_pipelines import PHENO_DTYPES
+
+# the dtype routed to the survival dataset kind (reference gdc2xena.py:86-92)
 SURVIVAL_DTYPE = "survival"
 
 

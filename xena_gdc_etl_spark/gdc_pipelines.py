@@ -2,8 +2,8 @@
 
 The reference binds each ``xena_dtype`` to a transform recipe
 (/root/reference/xena_gdc_etl/xena_dataset.py:927-1022 ``_RAWS2MATRIX_FUNCS``):
-which raw columns to read, the row index name, whether repeats are averaged,
-whether the matrix is log2(x+1)-transformed, NA filling, and rows to drop.
+which raw columns to read, the row index name, whether the matrix is
+log2(x+1)-transformed, and rows to drop; repeats are always averaged.
 Here the same registry drives DataFrame pipelines over LONG-format input
 (sample, feature, value) — the scalable shape of "one column per sample
 file". ``raw_long`` frames come from any source (parquet fact tables, melted
@@ -12,7 +12,7 @@ TSVs); the per-dtype semantics are identical.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,9 +41,7 @@ class DtypeSpec:
     name: str
     index_name: str
     log2tf: bool = True
-    average_repeats: bool = True
     drop_features: tuple = ()
-    fillna: float | None = None
     kind: str = "matrix"  # "matrix" | "segment" | "maf"
 
 
@@ -56,10 +54,10 @@ DTYPE_SPECS: dict[str, DtypeSpec] = {
         DtypeSpec("star_fpkm-uq", "Ensembl_ID", drop_features=STAR_SUMMARY_ROWS),
         DtypeSpec("mirna", "miRNA_ID"),
         DtypeSpec("mirna_isoform", "isoform_coords"),
-        DtypeSpec("gene-level_ascat-ngs", "Ensembl_ID", log2tf=False, fillna=float("nan")),
-        DtypeSpec("gene-level_ascat2", "Ensembl_ID", log2tf=False, fillna=float("nan")),
-        DtypeSpec("gene-level_ascat3", "Ensembl_ID", log2tf=False, fillna=float("nan")),
-        DtypeSpec("gene-level_absolute", "Ensembl_ID", log2tf=False, fillna=float("nan")),
+        DtypeSpec("gene-level_ascat-ngs", "Ensembl_ID", log2tf=False),
+        DtypeSpec("gene-level_ascat2", "Ensembl_ID", log2tf=False),
+        DtypeSpec("gene-level_ascat3", "Ensembl_ID", log2tf=False),
+        DtypeSpec("gene-level_absolute", "Ensembl_ID", log2tf=False),
         DtypeSpec("methylation_epic", "Composite Element REF", log2tf=False),
         DtypeSpec("methylation_epic_v2", "Composite Element REF", log2tf=False),
         DtypeSpec("methylation27", "Composite Element REF", log2tf=False),
@@ -74,6 +72,10 @@ DTYPE_SPECS: dict[str, DtypeSpec] = {
         DtypeSpec("somaticmutation_targeted", "sample", kind="maf", log2tf=False),
     ]
 }
+
+# Phenotype dtypes: landed by ``pipeline.GDCPhenosetSpark``, not by a
+# DtypeSpec recipe (reference gdc2xena.py:86-92 routes them to GDCPhenoset).
+PHENO_DTYPES = ("clinical", "biospecimen", "raw_phenotype", "GDC_phenotype")
 
 # Reference column renames for segment CNV matrices (xena_dataset.py:76-78).
 SEGMENT_RENAMES = {"Chromosome": "Chrom", "Copy_Number": "value", "Segment_Mean": "value"}

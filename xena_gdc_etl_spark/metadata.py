@@ -291,12 +291,16 @@ def _render_family(family: str, v: dict) -> dict:
     return {"label": label or family, "type": "genomicMatrix"}
 
 
+def projects_str(project_id: str | list[str]) -> str:
+    """A project list as the reference spells it in paths and sidecars:
+    comma-joined (xena_dataset.py:460, :570)."""
+    return ",".join(project_id) if isinstance(project_id, list) else project_id
+
+
 def xena_cohort(project_id: str | list[str]) -> str:
     """Cohort display name — ``GDC_XENA_COHORT`` lookup with the reference's
     ``'GDC ' + projects`` fallback (xena_dataset.py:570-575)."""
-    projects = (
-        ",".join(project_id) if isinstance(project_id, list) else project_id
-    )
+    projects = projects_str(project_id)
     return GDC_XENA_COHORT.get(projects, "GDC " + projects)
 
 
@@ -311,9 +315,7 @@ def build_metadata(
     the rendered per-dtype template fields (templates + METADATA_VARIABLES
     parity).
     """
-    projects = (
-        ",".join(project_id) if isinstance(project_id, list) else project_id
-    )
+    projects = projects_str(project_id)
     if os.path.exists(matrix_path):
         date = time.strftime(
             "%m-%d-%Y", time.gmtime(os.path.getmtime(matrix_path))
@@ -337,16 +339,6 @@ def build_metadata(
     }
     meta.update(rendered)
     return meta
-
-
-# Backward-compatible label map (used by earlier tests/tools); the canonical
-# label now comes from the rendered template fields.
-TYPE_LABELS = {
-    dtype: _render_family(family, METADATA_VARIABLES.get(dtype, {})).get(
-        "label", dtype
-    )
-    for dtype, family in TEMPLATE_FAMILY.items()
-}
 
 
 def write_metadata(metadata: dict, matrix_path: str) -> str:

@@ -3,9 +3,10 @@
 Covers gdc.py's metadata-shaping helpers: two-field mapping
 (/root/reference/xena_gdc_etl/gdc.py:655 ``map_two_fields``), the updated-file
 impact summary (gdc.py:615 ``gdc_check_new``), project catalog info
-(gdc.py:434 ``get_project_info``), list-aggregation of repeated fields
-(gdc.py:156 ``format_multiple_data``), and postprocessing's rename-and-dedup
+(gdc.py:434 ``get_project_info``), and postprocessing's rename-and-dedup
 (/root/reference/xena_gdc_etl/postprocessing.py:65).
+List-aggregation of repeated fields (gdc.py:156 ``format_multiple_data``)
+is ``operators.nested.format_multiple``.
 """
 
 from __future__ import annotations
@@ -79,21 +80,6 @@ def dedup_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     return df.dropDuplicates(subset=list(subset) if subset else None)
 
 
-def list_agg_per_key(
-    df: DataFrame,
-    key_col: str,
-    value_cols: Sequence[str],
-) -> DataFrame:
-    """Collapse repeated per-key records into per-key lists —
-    ``format_multiple_data`` (gdc.py:156 groupby('id').agg(list), used for
-    diagnoses/treatments arrays). Sorted for determinism.
-    """
-    aggs = [
-        F.array_sort(F.collect_list(F.col(c))).alias(c) for c in value_cols
-    ]
-    return df.groupBy(F.col(key_col)).agg(*aggs)
-
-
 # Xena dtypes whose matrices carry SAMPLES AS COLUMN NAMES (the reference's
 # ``sample_columns`` list, postprocessing.py:78); every other dtype is the
 # row form with a 'sample' column.
@@ -117,21 +103,6 @@ SUFFIX_TRIM_PROJECTS = {
     "CMI-MPC": 4,
     "CMI-MBC": 4,
 }
-
-
-def trim_sample_suffix(
-    long_df: DataFrame, n: int, sample_col: str = "sample"
-) -> DataFrame:
-    """Strip the last ``n`` characters from every sample id — the
-    reference's special-project rename (postprocessing.py:121-145: BEATAML
-    strips 1 char, CMI-MPC/CMI-MBC strip 4). Pure column expression; no
-    dedup in the reference for these projects, none here."""
-    return long_df.withColumn(
-        sample_col,
-        F.expr(
-            f"substring({sample_col}, 1, length({sample_col}) - {int(n)})"
-        ),
-    )
 
 
 def postprocess_rename_dedup(

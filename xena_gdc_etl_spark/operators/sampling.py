@@ -137,15 +137,12 @@ def rebalance_groups(
     if target is None:
         frac = F.col("__min_n") / F.col("__n")
     else:
-        expr = None
+        # F.when opens the CASE chain, Column.when extends it; an empty
+        # target lists no group, so every group's share is 0
+        case = F
         for value, share in target.items():
-            cond = F.col(group_col) == value
-            expr = (
-                F.when(cond, float(share))
-                if expr is None
-                else expr.when(cond, float(share))
-            )
-        tgt = expr.otherwise(F.lit(0.0))
+            case = case.when(F.col(group_col) == value, float(share))
+        tgt = case.otherwise(F.lit(0.0)) if target else F.lit(0.0)
         frac = tgt * F.col("__total_n") / F.col("__n")
     rates = counts.select(
         group_col, F.least(F.lit(1.0), frac).alias("__keep_frac")

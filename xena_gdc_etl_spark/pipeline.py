@@ -8,7 +8,8 @@ version keeps the same three-step surface but swaps the I/O model: the
 TSV) instead of fetching per-sample files, the transform is the registered
 per-dtype plan (gdc_pipelines), and the sink writes a Xena-TSV matrix plus
 the JSON metadata sidecar. Everything between source and sink is a single
-lazy plan — Catalyst sees the whole pipeline.
+lazy plan — Catalyst sees the whole pipeline. Every dataset kind lands
+through ``land_matrix`` at the path ``matrix_path`` names.
 """
 
 from __future__ import annotations
@@ -21,12 +22,47 @@ from pyspark.sql import DataFrame, SparkSession
 from xena_gdc_etl_spark.filters import FilterSpec
 from xena_gdc_etl_spark.gdc_pipelines import (
     DTYPE_SPECS,
+    PHENO_DTYPES,
     transform_maf_dtype,
     transform_matrix_dtype,
     transform_segment_dtype,
 )
-from xena_gdc_etl_spark.metadata import build_metadata, write_metadata
-from xena_gdc_etl_spark.sources.xena_tsv import write_xena_tsv
+from xena_gdc_etl_spark.metadata import build_metadata, projects_str, write_metadata
+from xena_gdc_etl_spark.sources.xena_tsv import write_wide_tsv, write_xena_tsv
+
+
+def matrix_path(
+    root_dir: str, projects: str | list[str], xena_dtype: str, name: str | None = None
+) -> str:
+    """Where a dataset's matrix lands — the reference layout
+    ``<root>/<projects>/Xena_Matrices/<projects>.<dtype>.tsv``
+    (xena_dataset.py:460); ``name`` overrides the file name."""
+    projects = projects_str(projects)
+    return os.path.join(
+        root_dir, projects, "Xena_Matrices", name or f"{projects}.{xena_dtype}.tsv"
+    )
+
+
+def land_matrix(
+    matrix: DataFrame,
+    out: str,
+    projects: str | list[str],
+    xena_dtype: str,
+    gdc_release: str = "",
+) -> str:
+    """Write one matrix, then its JSON sidecar: the landing step every
+    dataset kind shares (the reference's ``XenaDataset`` base class). A
+    DTYPE_SPECS ``matrix`` dtype is long (sample, feature, value) and pivots
+    on write; every other table (segment, MAF, phenotype, survival) is
+    already wide and lands verbatim. ``xena_dtype`` also picks the sidecar
+    template."""
+    spec = DTYPE_SPECS.get(xena_dtype)
+    if spec is not None and spec.kind == "matrix":
+        write_xena_tsv(matrix, out)
+    else:
+        write_wide_tsv(matrix, out)
+    write_metadata(build_metadata(projects, xena_dtype, out, gdc_release), out)
+    return out
 
 
 @dataclass
@@ -58,25 +94,6 @@ class XenaDatasetSpark:
         the GDC API filtering server-side."""
         return self.gdc_filter.apply(spark.read.parquet(source_path))
 
-    def download(
-        self,
-        manifest: DataFrame,
-        download_dir: str,
-        md5_col: str | None = None,
-        fetcher=None,
-    ) -> DataFrame:
-        """The reference's literal step 1 (``XenaDataset.download``,
-        xena_dataset.py:597: per-UUID fetch loop via ``download_map``) as a
-        cluster fan-out: hand a UUID manifest to ``sources.download`` and
-        get back a status table (path, md5, md5_ok per file). Callers then
-        parse the landed files into the long-format table ``load`` reads.
-        """
-        from xena_gdc_etl_spark.sources.download import download_files
-
-        return download_files(
-            manifest, download_dir, md5_col=md5_col, fetcher=fetcher
-        )
-
     # -- step 2: per-dtype transform ---------------------------------------
     def transform(self, raw: DataFrame) -> DataFrame:
         kind = DTYPE_SPECS[self.xena_dtype].kind
@@ -87,49 +104,17 @@ class XenaDatasetSpark:
         return transform_maf_dtype(raw, self.xena_dtype)
 
     # -- step 3: sink + metadata sidecar -----------------------------------
-    @property
-    def matrix_dir(self) -> str:
-        projects = (
-            ",".join(self.projects)
-            if isinstance(self.projects, list)
-            else self.projects
-        )
-        # reference layout: <root>/<projects>/Xena_Matrices (xena_dataset.py:460)
-        return os.path.join(self.root_dir, projects, "Xena_Matrices")
-
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        projects = (
-            ",".join(self.projects)
-            if isinstance(self.projects, list)
-            else self.projects
+        out = matrix_path(self.root_dir, self.projects, self.xena_dtype, name)
+        return land_matrix(
+            matrix, out, self.projects, self.xena_dtype, self.gdc_release
         )
-        name = name or f"{projects}.{self.xena_dtype}.tsv"
-        out = os.path.join(self.matrix_dir, name)
-        if DTYPE_SPECS[self.xena_dtype].kind == "matrix":
-            write_xena_tsv(matrix, out)
-        else:
-            # segment/MAF matrices are row-stacked tables, not pivoted
-            matrix.coalesce(1).write.options(
-                sep="\t", header=True, nullValue="NA"
-            ).mode("overwrite").csv(out)
-        self.metadata(out)
-        return out
-
-    def metadata(self, matrix_path: str) -> str:
-        meta = build_metadata(
-            self.projects, self.xena_dtype, matrix_path, self.gdc_release
-        )
-        return write_metadata(meta, matrix_path)
 
     # -- one-call pipeline --------------------------------------------------
     def run(self, spark: SparkSession, source_path: str) -> str:
         """download → transform → export, as the reference's CLI does per
         dataset (main.py etl subcommand)."""
         return self.export(self.transform(self.load(spark, source_path)))
-
-
-def _projects_str(projects: str | list[str]) -> str:
-    return ",".join(projects) if isinstance(projects, list) else projects
 
 
 @dataclass
@@ -152,12 +137,10 @@ class GDCPhenosetSpark:
     root_dir: str = "."
     gdc_release: str = ""
 
-    _VALID = ("clinical", "biospecimen", "raw_phenotype", "GDC_phenotype")
-
     def __post_init__(self) -> None:
-        if self.xena_dtype not in self._VALID:
+        if self.xena_dtype not in PHENO_DTYPES:
             raise ValueError(
-                f"xena_dtype must be one of {self._VALID}, got {self.xena_dtype!r}"
+                f"xena_dtype must be one of {PHENO_DTYPES}, got {self.xena_dtype!r}"
             )
 
     def load(
@@ -204,23 +187,10 @@ class GDCPhenosetSpark:
             merged = coalesce_join(clin, bio, on=sample_col, how="full")
         return merged
 
-    @property
-    def matrix_dir(self) -> str:
-        return os.path.join(
-            self.root_dir, _projects_str(self.projects), "Xena_Matrices"
-        )
-
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        name = name or f"{_projects_str(self.projects)}.{self.xena_dtype}.tsv"
-        out = os.path.join(self.matrix_dir, name)
-        matrix.coalesce(1).write.options(
-            sep="\t", header=True, nullValue="NA"
-        ).mode("overwrite").csv(out)
-        meta = build_metadata(
-            self.projects, "clinical", out, self.gdc_release
-        )
-        write_metadata(meta, out)
-        return out
+        out = matrix_path(self.root_dir, self.projects, self.xena_dtype, name)
+        # every phenotype dtype renders the clinical sidecar template
+        return land_matrix(matrix, out, self.projects, "clinical", self.gdc_release)
 
     def run(
         self,
@@ -257,24 +227,18 @@ class GDCSurvivalsetSpark:
 
         return survival_matrix(survival, case_samples, case_key)
 
-    @property
-    def matrix_dir(self) -> str:
-        return os.path.join(
-            self.root_dir, _projects_str(self.projects), "Xena_Matrices"
-        )
-
     def export(self, matrix: DataFrame, name: str | None = None) -> str:
-        name = name or f"{_projects_str(self.projects)}.survival.tsv"
-        out = os.path.join(self.matrix_dir, name)
+        out = matrix_path(self.root_dir, self.projects, self.xena_dtype, name)
         # Xena's header spells it "OS.time" (xena_dataset.py:1545); the
         # engine keeps OS_time internally (dots in Spark names fight column
         # resolution) and renames only at the sink.
-        matrix.withColumnRenamed("OS_time", "OS.time").coalesce(1).write.options(
-            sep="\t", header=True, nullValue="NA"
-        ).mode("overwrite").csv(out)
-        meta = build_metadata(self.projects, "survival", out, self.gdc_release)
-        write_metadata(meta, out)
-        return out
+        return land_matrix(
+            matrix.withColumnRenamed("OS_time", "OS.time"),
+            out,
+            self.projects,
+            self.xena_dtype,
+            self.gdc_release,
+        )
 
     def run(
         self,

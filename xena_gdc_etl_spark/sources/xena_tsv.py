@@ -115,18 +115,18 @@ def write_xena_tsv(
     )
     if feature_header:
         wide = wide.withColumnRenamed(feature_col, feature_header)
-    wide.coalesce(1).write.options(sep="\t", header=True, nullValue="NA").mode(
-        "overwrite"
-    ).csv(path)
+    write_wide_tsv(wide, path)
 
 
 def write_wide_tsv(wide_df: DataFrame, path: str) -> None:
     """Write an already-wide DataFrame as a Xena-style TSV directory,
     verbatim — no pivot, no per-cell aggregation, column order and row
-    multiplicity preserved. This is the row-form postprocess sink: the
-    reference's ``drop_duplicates()`` keeps BOTH rows when two samples
-    rename onto the same case but differ in any value, and a pivot with
-    ``F.first`` would silently collapse them (round-9 advisor finding)."""
+    multiplicity preserved. This is the one Xena TSV sink: pivoted
+    matrices arrive through ``write_xena_tsv``; row-stacked tables
+    (segment, MAF, phenotype, survival) and the row-form postprocess land
+    here directly. The reference's ``drop_duplicates()`` keeps BOTH rows
+    when two samples rename onto the same case but differ in any value,
+    and a pivot with ``F.first`` would silently collapse them."""
     wide_df.coalesce(1).write.options(
         sep="\t", header=True, nullValue="NA"
     ).mode("overwrite").csv(path)
