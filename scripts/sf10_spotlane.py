@@ -287,15 +287,10 @@ def _reset_caches(spark) -> None:
     every operator-internal seam so trial 2 re-pays the full build (a
     min-of-2 over WARM second runs would measure the cache, not the
     stage)."""
-    from xena_gdc_etl_spark import workload as wl
-    from xena_gdc_etl_spark.operators.seams import release_seams
+    from xena_gdc_etl_spark.operators.seams import release_seams, release_shared
 
     release_seams(spark)
-    for cache in (
-        wl._SIG_CACHE, wl._IVF_CACHE, wl._PAIRS_CACHE,
-        wl._LSH_PAIRS_CACHE, wl._TF_CACHE, wl._PACK_CACHE,
-    ):
-        cache.pop(spark, None)
+    release_shared(spark)
     spark.catalog.clearCache()
 
 
@@ -409,22 +404,18 @@ def main() -> None:
             # events-only run (temporal family) must not pay minutes of
             # signature/LSH builds it never reads
             warm_stages = () if os.environ.get("SPOTLANE_SKIP_WARMS") else (
-                ("shared_signatures_warm", wl._shared_signatures),
-                ("shared_lsh_pairs_warm", wl._shared_lsh_pairs),
-                ("shared_tf_warm", wl._shared_doc_tf),
+                "shared_signatures_warm", "shared_lsh_pairs_warm",
+                "shared_tf_warm",
             )
             if any(q in EMB_QUERIES for q in effective):
                 # the embedding family's warm tier (assignment, τ-pairs)
                 # gets its own attribution lines, same as the doc tier —
                 # SPOTLANE_SKIP_WARMS does not skip these: they ARE two
                 # of the lane's target stages
-                warm_stages += (
-                    ("shared_ivf_warm", wl._shared_ivf_assigned),
-                    ("shared_pairs_warm", wl._shared_dup_pairs),
-                )
-            for label, fn in warm_stages:
+                warm_stages += ("shared_ivf_warm", "shared_pairs_warm")
+            for label in warm_stages:
                 start = time.perf_counter()
-                n = fn(spark, d).count()
+                n = wl.SHARED_TIERS[label](spark, d).count()
                 sec = round(time.perf_counter() - start, 3)
                 r = results.setdefault(label, {})
                 r[scale] = min(r.get(scale, float("inf")), sec)

@@ -196,14 +196,7 @@ def build_fixture(spark, sf_dir: str, work_dir: str) -> None:
 def _warm_shared(spark, sf_dir: str, timings: dict) -> None:
     from xena_gdc_etl_spark import workload as wl
 
-    for label, fn in (
-        ("shared_signatures_warm", wl._shared_signatures),
-        ("shared_lsh_pairs_warm", wl._shared_lsh_pairs),
-        ("shared_ivf_warm", wl._shared_ivf_assigned),
-        ("shared_pairs_warm", wl._shared_dup_pairs),
-        ("shared_tf_warm", wl._shared_doc_tf),
-        ("shared_pack_warm", wl._shared_pack_layout),
-    ):
+    for label, fn in wl.SHARED_TIERS.items():
         start = time.perf_counter()
         fn(spark, sf_dir).count()
         timings[label] = round(time.perf_counter() - start, 3)

@@ -192,6 +192,31 @@ def test_ivf_assign_and_train_step_accept_driver_rows(spark):
         sim.ivf_assign(emb, cent_rows, max_driver_rows=1)
 
 
+def test_ivf_train_step_none_centroid_same_in_both_forms(spark):
+    """A centroid with a None vector attracts no members and is carried
+    as a null centroid: the sequence form returns the same rows as the
+    DataFrame form, and an empty sequence is rejected clearly."""
+    import pytest
+
+    emb = _emb_df(spark)
+    # the None vector comes first: the sequence form probes dim past it
+    cent_rows = [(99, None)] + [
+        (r.vec_id, list(r.embedding))
+        for r in emb.filter(F.col("vec_id").isin(0, 2)).collect()
+    ]
+    cent_df = spark.createDataFrame(
+        cent_rows, "centroid_id long, embedding array<double>"
+    )
+    sa = sim.ivf_train_step(emb, cent_df, dim=3)
+    sb = sim.ivf_train_step(emb, cent_rows)
+    assert sa.exceptAll(sb).count() == 0 and sb.exceptAll(sa).count() == 0
+    out = {r.centroid_id: r for r in sb.collect()}
+    assert out[99].n_members == 0 and out[99].embedding is None
+
+    with pytest.raises(ValueError, match="at least one centroid"):
+        sim.ivf_train_step(emb, [])
+
+
 def test_cosine_dup_pairs_threshold(spark):
     emb = _emb_df(spark)
     centroids = emb.filter(F.col("vec_id").isin(0, 2)).select(

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xena_gdc_etl_spark.operators import seams
-from xena_gdc_etl_spark.operators.seams import release_seams, seam
+from xena_gdc_etl_spark.operators.seams import release_seams, release_shared, seam
 
 
 def _cache_empty(spark) -> bool:
@@ -90,6 +90,39 @@ def test_evicted_seam_recomputes_correctly(spark):
     assert _cache_empty(spark)
 
 
+def test_shared_store_hit_replace_release(spark, sf_dir, tmp_path):
+    """The session-artifact store behind workload._shared_*: a key hit
+    returns the identical frame, a new key unpersists the replaced frame,
+    and release_shared uncaches every stored frame (non-frame values such
+    as the IVF cell count are dropped but not counted)."""
+    import os
+    import shutil
+
+    from xena_gdc_etl_spark import workload
+
+    _fresh(spark)
+    release_shared(spark)
+    tf = workload._shared_doc_tf(spark, sf_dir)
+    assert workload._shared_doc_tf(spark, sf_dir) is tf
+    assert tf.storageLevel.useMemory
+    # a copy of the corpus under another directory: a new key AND a new
+    # plan (the same plan would re-register the old cache entry)
+    src = os.path.join(sf_dir, "documents.parquet")
+    copy = shutil.copytree if os.path.isdir(src) else shutil.copy
+    copy(src, str(tmp_path / "documents.parquet"))
+    tf2 = workload._shared_doc_tf(spark, str(tmp_path))
+    assert tf2 is not tf
+    assert not tf.storageLevel.useMemory
+    assert tf2.storageLevel.useMemory
+    layout = workload._shared_pack_layout(spark, sf_dir)
+    assert workload._ivf_n_cells(spark, sf_dir) >= 8
+    assert release_shared(spark) == 2
+    assert not tf2.storageLevel.useMemory
+    assert not layout.storageLevel.useMemory
+    assert release_shared(spark) == 0
+    release_seams(spark)
+
+
 def test_serving_soak_memory_bounded(spark, sf_dir):
     """The measured serving-loop claim (scripts/serve_soak.py, BASELINE
     §serve-soak) at test scale: three iterations of a seam-heavy basket
@@ -103,10 +136,7 @@ def test_serving_soak_memory_bounded(spark, sf_dir):
     from xena_gdc_etl_spark import workload
 
     # drop warm shared caches so the bound is established by iteration 1
-    for cache in (workload._IVF_CACHE, workload._PAIRS_CACHE):
-        entry = cache.pop(spark, None)
-        if entry is not None:
-            entry[-1].unpersist()
+    release_shared(spark)
     spec = importlib.util.spec_from_file_location(
         "serve_soak",
         os.path.join(

@@ -39,16 +39,12 @@ conditional partitioning cannot change results.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # Per-core byte threshold for the "underfilled" verdict. 16 MiB of
 # compressed parquet per core ≈ one small row group; scans denser than
-# this fill their splits with real rows. Overridable for tests/tuning.
-SPREAD_BYTES_PER_CORE = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_CORE", str(16 * 1024 * 1024))
-)
+# this fill their splits with real rows.
+SPREAD_BYTES_PER_CORE = 16 * 1024 * 1024
 
 # Catalyst reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by
 # default) for relations it cannot estimate — JDBC scans, stat-less DSv2
@@ -139,7 +135,10 @@ def spread(
     Python task round-trip per core than the single-task compute it
     saves (measured: the 0.6 MiB sf0.1 embedding frame's assign runs
     0.71 s unspread vs 1.00 s spread on 32 cores). UNKNOWN sizes never
-    hit the floor — they keep the spread."""
+    hit the floor — they keep the spread. An explicit repartition width
+    (``explicit_partition_width``) takes precedence over ``min_bytes``:
+    a frame repartitioned narrower than ``parallelism`` is spread even
+    when its size is below the floor."""
     if df.isStreaming:
         # micro-batch sources manage their own partitioning; probing a
         # stream is meaningless (and .rdd is illegal on one)

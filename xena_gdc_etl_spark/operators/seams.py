@@ -40,19 +40,36 @@ bounded, replace-and-unpersist discipline the session-scoped
   registry holds — the between-queries hook for benches and serving
   loops that want the cache manager empty.
 
-The registry itself holds only DataFrame handles (the cached bytes live
-in the JVM block manager); a session's entries die with the session via
-the WeakKeyDictionary.
+Session artifacts — the ``workload._shared_*`` tiers several queries read
+(minhash signatures, LSH pairs, IVF assignment, τ-pairs, doc term
+frequencies, pack layout) — live in a second, uncapped per-session store:
+
+- ``shared(spark, name, key, build)`` holds one ``(key, value)`` slot per
+  ``name``. A call with the stored key returns the stored value (the same
+  object, so its cache entry is hit); any other key unpersists the old
+  value if it is a DataFrame, then stores and returns ``build()``. The
+  builder does its own ``persist()``; the store only owns the lifetime.
+- ``release_shared(spark)`` unpersists every stored frame and empties the
+  session's store — the between-trials reset for benches that must
+  re-pay the tier builds.
+
+Both stores hold only handles (the cached bytes live in the JVM block
+manager); a session's entries die with the session via the
+WeakKeyDictionary.
 """
 
 from __future__ import annotations
 
 import weakref
 from collections import OrderedDict
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 SEAM_CAP = 8
+
+T = TypeVar("T")
 
 # Monotonic count of cap-evicted seams (process-wide): observability for
 # the eviction-pressure soak (scripts/serve_soak.py --evict) and tests —
@@ -67,6 +84,9 @@ SEAM_CAP = 8
 EVICTIONS = 0
 
 _REG: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = (
+    weakref.WeakKeyDictionary()
+)
+_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
     weakref.WeakKeyDictionary()
 )
 
@@ -139,4 +159,31 @@ def release_seams(spark: SparkSession) -> int:
             n += 1
         except Exception:  # pragma: no cover - stopped-session race
             pass
+    return n
+
+
+def shared(spark: SparkSession, name: str, key, build: Callable[[], T]) -> T:
+    """Session artifact ``name`` for ``key``: the stored value on a key
+    hit, else ``build()`` (after unpersisting the replaced frame)."""
+    store = _SHARED.setdefault(spark, {})
+    entry = store.get(name)
+    if entry is not None:
+        if entry[0] == key:
+            return entry[1]
+        if isinstance(entry[1], DataFrame):
+            entry[1].unpersist()
+    value = build()
+    store[name] = (key, value)
+    return value
+
+
+def release_shared(spark: SparkSession) -> int:
+    """Unpersist every stored session artifact frame for ``spark`` and
+    empty its store; returns how many frames were released."""
+    store = _SHARED.pop(spark, None) or {}
+    n = 0
+    for _, value in store.values():
+        if isinstance(value, DataFrame):
+            value.unpersist()
+            n += 1
     return n

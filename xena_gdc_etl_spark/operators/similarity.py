@@ -12,7 +12,6 @@ xena_gdc_etl_spark.functions for tests and single-pair use.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator, Sequence
 from typing import NamedTuple
 
@@ -49,10 +48,8 @@ DEFAULT_MAX_BROADCAST_ROWS = 1 << 16
 # partitioning. 4 MiB ≈ 16k d=64 double vectors — a single-core BLAS
 # pass over that is ~ms, far below one repartition exchange + 32 Arrow
 # task round-trips (A/B on the sf0.1 embedding frame: 0.71 s unspread
-# vs 1.00 s spread). Env-overridable for cluster tuning.
-SPREAD_MIN_MATMUL_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_MATMUL_BYTES", str(4 * 1024 * 1024))
-)
+# vs 1.00 s spread).
+SPREAD_MIN_MATMUL_BYTES = 4 * 1024 * 1024
 
 
 def _collect_bounded(df: DataFrame, what: str, limit: int) -> list:
@@ -1120,14 +1117,25 @@ def ivf_train_step(
         # assignment, and the keep-previous join side becomes a ONE-slice
         # local frame — a k-slice default would cost a task per core in
         # the broadcast-build job for k tiny rows
+        if not centroids:
+            raise ValueError("ivf_train_step needs at least one centroid")
         if dim is None:
-            dim = len(centroids[0][1])
+            dim = next((len(v) for _, v in centroids if v is not None), None)
+            if dim is None:
+                raise ValueError(
+                    "ivf_train_step cannot probe dim: every centroid "
+                    "vector is None"
+                )
         from xena_gdc_etl_spark.operators.partitioning import local_rows_df
 
         spark = vectors.sparkSession
         prev = local_rows_df(
             spark,
-            [(int(c), [float(x) for x in v]) for c, v in centroids],
+            # a None vector becomes a null __prev, as in the DataFrame form
+            [
+                (int(c), None if v is None else [float(x) for x in v])
+                for c, v in centroids
+            ],
             f"{centroid_id} long, __prev array<double>",
         )
     assigned = ivf_assign(

@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# spark.sql.ui.retainedExecutions for every session (reason in get_spark)
+RETAINED_EXECUTIONS = 64
+
 
 def get_spark(
     app_name: str = "xena-gdc-etl-spark",
@@ -62,10 +65,7 @@ def get_spark(
         # queries. 64 retained executions keeps recent diagnostics and
         # makes the soak's heap series flat (scripts/serve_soak.py,
         # BASELINE §serve-soak).
-        .config(
-            "spark.sql.ui.retainedExecutions",
-            os.environ.get("SPARK_GRAFT_RETAINED_EXECUTIONS", "64"),
-        )
+        .config("spark.sql.ui.retainedExecutions", str(RETAINED_EXECUTIONS))
         # ...and the job/stage/task stores (defaults 1000/1000/100k):
         # the A/B soak showed executions alone leaves ~1 MB/iter of
         # creep from task/stage records; with all four bounded the
